@@ -30,6 +30,7 @@ import data_transform_spark.streaming  # noqa: E402,F401 — populates registry
 from data_transform_spark.plans.flagship import flagship  # noqa: E402
 from data_transform_spark.registry import ORACLES, QUERIES  # noqa: E402
 from data_transform_spark.session import configure_session  # noqa: E402
+from data_transform_spark.shares import release_shares  # noqa: E402
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -42,7 +43,7 @@ def _wrap(fn: Callable) -> Callable[[SparkSession, str], DataFrame]:
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         configure_session(spark)
         # r14: release the previous key's persisted share frames at
-        # every top-level build (the e2e discipline, applied uniformly).
+        # every top-level build (see data_transform_spark.shares).
         # Keys persist intermediates for WITHIN-action branch sharing;
         # releasing here bounds live cache to one key's shares and
         # guarantees a repeated build recomputes from the parquet inputs
@@ -50,9 +51,7 @@ def _wrap(fn: Callable) -> Callable[[SparkSession, str], DataFrame]:
         # CacheManager plan-matching. Nested key-in-key calls go direct
         # (not through queries()), so a composite key's internal shares
         # survive its own build.
-        from data_transform_spark.pipeline.e2e import _release_prior_shares
-
-        _release_prior_shares()
+        release_shares()
         return fn(spark, sf_dir)
 
     return run

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table
 from data_transform_spark.registry import register
+from data_transform_spark.shares import checkpoint, free
 
 PR_ITERS = 3
 PR_DAMP = 0.85
@@ -154,7 +155,7 @@ def graph_pagerank(spark, sf_dir):
     )
     # edges feed every iteration: checkpoint once so the 5-table build runs
     # a single time (and, at scale, to cut lineage growth per iteration).
-    edges = edges.localCheckpoint(eager=False)
+    edges = checkpoint(edges, eager=False)
     nodes = load_table(spark, sf_dir, "nation").select(
         F.col("n_name").alias("node")
     )
@@ -227,13 +228,13 @@ def graph_reachability(spark, sf_dir):
     and out-degree {REACH_TOPK} the tree is <=121 paths, cheaper than the
     extra shuffles."""
     w = Window.partitionBy("src").orderBy(F.col("w").desc(), "dst")
-    sparse = (
+    sparse = checkpoint(
         _edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= REACH_TOPK)
-        .select("src", "dst")
-        .localCheckpoint(eager=False)
+        .select("src", "dst"),
+        eager=False,
     )
     frontier = spark.range(1).select(
         F.lit(REACH_SRC).alias("node"), F.lit(0).alias("hop")
@@ -288,7 +289,7 @@ def graph_triangles(spark, sf_dir):
     squared. Wedges shuffle on the closing edge's key pair; at 100 TB the
     edge list is pre-partitioned by `a` so the wedge join is co-located."""
     w = Window.partitionBy("src").orderBy(F.col("w").desc(), "dst")
-    und = (
+    und = checkpoint(
         _edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
         .withColumn("rn", F.row_number().over(w))
@@ -296,8 +297,8 @@ def graph_triangles(spark, sf_dir):
         .select(
             F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
         )
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = und.select(F.col("a").alias("y2"), F.col("b").alias("z"))
@@ -317,36 +318,6 @@ def graph_triangles(spark, sf_dir):
     return nodes.join(counts, "node", "left").select(
         "node", F.coalesce("cnt", F.lit(0)).cast("long").alias("triangles")
     )
-
-
-def _persistent_rdd_ids(spark) -> set:
-    """IDs of RDDs currently pinned in this session's block manager
-    (JavaSparkContext.getPersistentRDDs) — eager localCheckpoint persists
-    its RDD there, and nothing releases it automatically, so iterative
-    loops must track and free superseded checkpoints themselves."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(i) for i in jmap.keySet().toArray()}
-
-
-def _checkpoint_rdd_id(df):
-    """Persistent-RDD id backing an eagerly localCheckpoint-ed frame: its
-    analyzed plan is a LogicalRDD wrapping the checkpoint RDD. Exact
-    PER-FRAME tracking — reading the id off the frame itself (never by
-    diffing the session-global persistent map) means concurrent work on
-    the same SparkSession can checkpoint freely without this loop ever
-    releasing a block it does not own."""
-    try:
-        return int(df._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:  # non-LogicalRDD plan (not a checkpointed frame)
-        return None
-
-
-def _release_rdds(spark, ids) -> None:
-    """Unpersist (async) the given persistent-RDD ids if still pinned."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        if jmap.containsKey(rid):
-            jmap.get(rid).unpersist(False)
 
 
 def pagerank_converged(
@@ -415,10 +386,11 @@ def pagerank_converged(
     """
     e = _edges(spark, sf_dir) if edges is None else edges
     out_w = e.groupBy("src").agg(F.sum("w").alias("out_w"))
-    edges_df = (
-        e.join(out_w, "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("share"))
-        .localCheckpoint(eager=True)  # feeds every iteration: build once
+    # feeds every iteration: build once
+    edges_df = checkpoint(
+        e.join(out_w, "src").select(
+            "src", "dst", (F.col("w") / F.col("out_w")).alias("share")
+        )
     )
     if edges is None:
         nodes = load_table(spark, sf_dir, "nation").select(
@@ -434,14 +406,9 @@ def pagerank_converged(
             .distinct()
         )
         n_nodes = None  # counted after the checkpoint below
-    nodes = nodes.localCheckpoint(eager=True)
+    nodes = checkpoint(nodes)
     if n_nodes is None:
         n_nodes = nodes.count()
-    setup_ids = {
-        rid
-        for rid in (_checkpoint_rdd_id(edges_df), _checkpoint_rdd_id(nodes))
-        if rid is not None
-    }
     rank = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
     # dangling vertices: in the universe but never a src (no out-edges);
     # their rank mass would otherwise vanish each iteration
@@ -450,7 +417,7 @@ def pagerank_converged(
     )
 
     iters, delta = 0, float("inf")
-    live_ids: set = set()
+    live: list = []
     for i in range(max_iters):
         contrib = (
             edges_df.join(rank, edges_df.src == rank.node)
@@ -489,11 +456,9 @@ def pagerank_converged(
                 ).alias("rank"),
             )
         )
-        fresh_ids = None
-        if (i + 1) % checkpoint_every == 0:
-            new_rank = new_rank.localCheckpoint(eager=True)
-            rid = _checkpoint_rdd_id(new_rank)
-            fresh_ids = {rid} if rid is not None else set()
+        checkpointed = (i + 1) % checkpoint_every == 0
+        if checkpointed:
+            new_rank = checkpoint(new_rank)
         d = (
             new_rank.alias("n")
             .join(rank.alias("o"), "node")
@@ -509,17 +474,17 @@ def pagerank_converged(
         delta = float(d) if d is not None else 0.0
         rank = new_rank
         iters = i + 1
-        if fresh_ids is not None:
+        if checkpointed:
             # the delta aggregate above was the last reader of the previous
             # checkpoint's chain — safe to release it now
-            _release_rdds(spark, live_ids)
-            live_ids = fresh_ids
+            free(*live)
+            live = [new_rank]
         if delta < tol:
             break
     # Pin the final rank in its own block, then release everything else this
     # call persisted — the returned frame depends on no other block.
-    rank = rank.localCheckpoint(eager=True)
-    _release_rdds(spark, live_ids | setup_ids)
+    rank = checkpoint(rank)
+    free(*live, edges_df, nodes)
     return rank, iters, delta
 
 

@@ -31,6 +31,12 @@ from pyspark.sql import functions as F
 
 from data_transform_spark.io import load_table
 from data_transform_spark.registry import register
+from data_transform_spark.shares import (
+    fill_concurrently,
+    release_shares,
+    share,
+    submit_fill,
+)
 
 TOPK = 5
 N_QUERIES = 20  # vec_id < 20 are the query vectors
@@ -492,10 +498,8 @@ def ivf_index(e):
     # Lloyd chain. Eager localCheckpoint since the r14 optimization
     # round (see _pq_train_encode — the lineage-truncation rationale and
     # the subtree-CPU A/B: sim_ann_ivf 18.4 -> 11.5 CPU-s).
-    from data_transform_spark.pipeline.e2e import _persist_share
-
-    cent = _persist_share(cent, eager=True)
-    assign = _persist_share(
+    cent = share(cent, eager=True)
+    assign = share(
         _nearest_centroid(e.select("vec_id", "emb"), cent, "vec_id", "list_id"),
         eager=True,
     )
@@ -553,21 +557,6 @@ def sim_ann_ivf_topk(spark, sf_dir, probes: int = IVF_PROBES):
     )
 
 
-def _fresh_shares() -> None:
-    """Release the previous key's persisted share frames (the e2e
-    discipline) at registered-key entry. Every ANN key persists its
-    shared intermediates (trained index frames, the summary's pair
-    frames) for WITHIN-action branch sharing; releasing at entry keeps
-    live cache bounded to one key's shares AND guarantees each
-    invocation recomputes from the parquet inputs — a repeated build in
-    one session must never serve a prior build's cache via
-    CacheManager plan-matching (that would turn a timed rep into a
-    cache read)."""
-    from data_transform_spark.pipeline.e2e import _release_prior_shares
-
-    _release_prior_shares()
-
-
 def _ann_recall_summary(ann, exact, recall_bound: float, eager: bool = True):
     """One-row verification summary: result counts + a recall bound check.
 
@@ -591,11 +580,6 @@ def _ann_recall_summary(ann, exact, recall_bound: float, eager: bool = True):
     subtree-CPU A/B: lsh 14.6 -> 10.0 CPU-s from this change alone)."""
     from concurrent.futures import Future
 
-    from data_transform_spark.pipeline.e2e import (
-        _fill_concurrently,
-        _persist_share,
-    )
-
     # eager=False for the STAGED-serve keys (persist/append/compact/
     # graph): their pipelines are parquet reads + a shallow probe, so
     # there is no duplicated deep chain for the fill to save and the
@@ -610,24 +594,24 @@ def _ann_recall_summary(ann, exact, recall_bound: float, eager: bool = True):
     # training, overlapping the brute-force pass with the training fills
     # (_overlapped_exact_fill below).
     if isinstance(exact, Future):
-        ann_pairs = _persist_share(
+        ann_pairs = share(
             ann.select("query_id", "neighbor_id"), eager=eager
         )
         exact_pairs = exact.result()
     elif eager:
-        exact_pairs, ann_pairs = _fill_concurrently(
-            lambda: _persist_share(
+        exact_pairs, ann_pairs = fill_concurrently(
+            lambda: share(
                 exact.select("query_id", "neighbor_id"), eager=True
             ),
-            lambda: _persist_share(
+            lambda: share(
                 ann.select("query_id", "neighbor_id"), eager=True
             ),
         )
     else:
-        exact_pairs = _persist_share(
+        exact_pairs = share(
             exact.select("query_id", "neighbor_id"), eager=False
         )
-        ann_pairs = _persist_share(
+        ann_pairs = share(
             ann.select("query_id", "neighbor_id"), eager=False
         )
     counts = ann_pairs.agg(
@@ -662,10 +646,8 @@ def _overlapped_exact_fill(spark, sf_dir):
     independent of the index, so its corpus scan overlaps the training
     fills the caller runs next instead of serializing after them.
     _ann_recall_summary resolves the Future after filling the ANN side."""
-    from data_transform_spark.pipeline.e2e import _persist_share, _submit_fill
-
-    return _submit_fill(
-        lambda: _persist_share(
+    return submit_fill(
+        lambda: share(
             sim_topk_bruteforce(spark, sf_dir).select(
                 "query_id", "neighbor_id"
             ),
@@ -678,7 +660,7 @@ def _overlapped_exact_fill(spark, sf_dir):
 def sim_ann_ivf(spark, sf_dir):
     """IVF-Flat ANN, bounds-checked: recall vs exact top-5 must be >= 0.45
     (measured 0.57–0.63 across sf0.001/0.01/0.1 with K=16, 4 probes)."""
-    _fresh_shares()
+    release_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     return _ann_recall_summary(sim_ann_ivf_topk(spark, sf_dir), exact_f, 0.45)
 
@@ -693,7 +675,7 @@ def sim_ann_lsh(spark, sf_dir):
     0.35–0.37 at ~13% for the old 8×6 single-probe config, and vs IVF's
     0.57–0.63 at ~25% with 4/16 probes; full measured grid in SCALING.md
     "Round-8 LSH retune")."""
-    _fresh_shares()
+    release_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     return _ann_recall_summary(sim_ann_lsh_topk(spark, sf_dir), exact_f, 0.45)
 
@@ -856,10 +838,8 @@ def _pq_train_encode(e):
     # A/B that kept lazy persist could not see that through host noise;
     # the subtree-CPU A/B did: sim_ann_pq 30.6 -> 12.8 CPU-s, ivfpq
     # 51.9 -> 15.8.
-    from data_transform_spark.pipeline.e2e import _persist_share
-
-    cent = _persist_share(cent, eager=True)
-    codes = _persist_share(
+    cent = share(cent, eager=True)
+    codes = share(
         _pq_assign(cent, sub).select("vec_id", "m", F.col("c_id").alias("code")),
         eager=True,
     )
@@ -1020,7 +1000,7 @@ def sim_ann_pq(spark, sf_dir):
     row per (vector, subspace) — corpus × PQ_M — and a full M × Ks
     codebook (no empty-cluster collapse; min cluster membership measured
     9/12/68 at the three SFs)."""
-    _fresh_shares()
+    release_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
@@ -1188,7 +1168,7 @@ def sim_ann_ivfpq(spark, sf_dir):
     code rows, the full M×Ks residual codebook (no empty-cluster
     collapse; min membership 13/14/24 at the three SFs), and all IVF_K
     coarse lists materialized."""
-    _fresh_shares()
+    release_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
@@ -1325,7 +1305,7 @@ def sim_ann_persist(spark, sf_dir):
     all IVF_K lists for THIS SF: an index from another SF (different
     corpus count) can neither live at this dir name (SF-namespaced,
     content-fingerprinted) nor pass the n_code_rows pin."""
-    _fresh_shares()
+    release_shares()
     staged = ivfpq_stage_index(spark, sf_dir)
     cent, books, codes_l = ivfpq_read_index(spark, staged)
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -1714,7 +1694,7 @@ def sim_ann_index_append(spark, sf_dir):
     ×M staged code rows, batch ×M appended rows, full codebook, all
     lists. At 100 TB this is how the index grows nightly: the training
     job never re-runs; each crawl batch pays one assignment scan."""
-    _fresh_shares()
+    release_shares()
     # r15 (profiled): unlike sim_ann_persist's shallow staged probe, the
     # append serve chain carries the batch ENCODE + the merged-codes ADC
     # scan (~12 of the key's ~26 CPU-s), and with lazy pair persists the
@@ -1936,16 +1916,11 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS, release: bool 
     stays lazy so the returned frame's plan still shows the staged
     adjacency scan (plan-pinned by the serve-plan test); the 3-way
     intra-round sharing rides the checkpoint scan."""
-    from data_transform_spark.pipeline.e2e import (
-        _persist_share,
-        _release_prior_shares,
-    )
-
     # release=False when the caller already released at key entry AND has
     # a concurrent share fill in flight that a release here would free
     # from under it (the sim_ann_graph body, r15).
     if release:
-        _release_prior_shares()
+        release_shares()
     staged = graph_stage_index(spark, sf_dir)
     adj = spark.read.parquet(f"{staged}/adjacency")
     e = load_table(spark, sf_dir, "embeddings").select(
@@ -1964,8 +1939,8 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS, release: bool 
         F.col("vec_id").alias("query_id"), F.col("emb").alias("q_emb")
     )
     score = F.round(_cos(F.col("q_emb"), F.col("n_emb")), 4)
-    # via _persist_share so the round checkpoints are release-tracked (r15)
-    visited = _persist_share(
+    # via share() so the round checkpoints are release-tracked (r15)
+    visited = share(
         q.crossJoin(F.broadcast(seeds)).select(
             "query_id", "node", score.alias("score")
         ),
@@ -2004,7 +1979,7 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS, release: bool 
         )
         visited = visited.unionByName(scored_new)
         if r < rounds - 1:
-            visited = _persist_share(visited, eager=True)
+            visited = share(visited, eager=True)
     return (
         visited.filter(F.col("node") != F.col("query_id"))
         .withColumn("rn", F.row_number().over(w_beam))
@@ -2029,7 +2004,7 @@ def sim_ann_graph(spark, sf_dir):
     # (graph keeps the eager fill: unlike persist/append/compact its
     # serve+verify chains measured 6.8 vs 9.8 CPU-s in its favor with
     # walls equal — the beam rounds re-run per branch without it.)
-    _fresh_shares()
+    release_shares()
     exact_f = _overlapped_exact_fill(spark, sf_dir)
     return _ann_recall_summary(
         sim_ann_graph_topk(spark, sf_dir, release=False), exact_f, 0.45
@@ -2176,7 +2151,7 @@ def sim_ann_index_compact(spark, sf_dir):
     staleness probe is one assignment scan over the appended slice — both
     are the nightly maintenance cost, and historical raw vectors are
     never re-read."""
-    _fresh_shares()
+    release_shares()
     staged = ivfpq_stage_compact(spark, sf_dir)
     appends = ivfpq_stage_appends(spark, sf_dir)
     hist_staged = ivfpq_stage_hist_index(spark, sf_dir)
@@ -2750,7 +2725,7 @@ def sim_ann_recall_curve(spark, sf_dir):
     per level. Scale: candidate volume is |Q|·(N/K)·max_probes rows and
     the exact side |Q|·N — both linear in the corpus for a fixed query
     panel, shuffled once each."""
-    _fresh_shares()
+    release_shares()
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -2813,21 +2788,19 @@ def sim_ann_recall_curve(spark, sf_dir):
     # counts) and exact feeds two (n_exact + hit join) across broadcast
     # crossJoins where exchange reuse does not fire — persist both tiny
     # frames (≤ levels·|Q|·TOPK rows) so the probed scan and the exact
-    # top-k run once per action (_fresh_shares at entry releases them).
-    from data_transform_spark.pipeline.e2e import _persist_share
-
+    # top-k run once per action (release_shares() at entry frees them).
     # (r14 A/B: the EAGER checkpoint variant measured 2x CPU here —
     # 3.9 -> 7.5 CPU-s — unlike the trained-index keys: this frame's
     # single consumer pair shares exchanges within one action, so the
     # fill only added jobs. Lazy persist stays.)
-    ann = _persist_share(
+    ann = share(
         cand.join(F.broadcast(levels), F.col("probe_rank") <= F.col("probes"))
         .withColumn("rn", F.row_number().over(wl))
         .filter(F.col("rn") <= TOPK)
         .select("probes", "query_id", "neighbor_id")
     )
     we = Window.partitionBy("query_id").orderBy(F.col("sim_u").desc(), "neighbor_id")
-    exact = _persist_share(
+    exact = share(
         F.broadcast(q)
         .join(e_n, F.col("query_id") != F.col("vec_id"))
         .select(

@@ -29,6 +29,7 @@ from data_transform_spark.operators.scans import SCRATCH
 from data_transform_spark.pipeline.dedup import MINHASH_INCR_ORACLE
 from data_transform_spark.pipeline.text import PII_SCRUB_ORACLE, pii_plant, pii_scrub
 from data_transform_spark.registry import register
+from data_transform_spark.shares import checkpoint, free
 
 
 def _source_stamp(src: str) -> str:
@@ -666,8 +667,8 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
         # downstream join tasks would otherwise serialize per task (the
         # capstone-share mechanism; plain lazy/eager PERSIST variants
         # measured SLOWER here — OPTIMIZATION_r14.md wave 3/6).
-        bands_b = _sig_bands(minhash_signatures(batch_df)).localCheckpoint()
-        sh_b = _shingle_digests(batch_df).localCheckpoint()
+        bands_b = checkpoint(_sig_bands(minhash_signatures(batch_df)))
+        sh_b = checkpoint(_shingle_digests(batch_df))
         store_bands = s.read.parquet(*_prior(bands_dir, batch_id))
         store_sh = s.read.parquet(*_prior(sh_dir, batch_id))
         h, n = store_bands.alias("h"), bands_b.alias("n")
@@ -703,10 +704,7 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
         # writes are done — otherwise they accumulate across micro-batches
         # until Python GC lets ContextCleaner at them, a slow executor
         # storage leak on a long-running stream.
-        from data_transform_spark.pipeline.e2e import _free_local_checkpoint
-
-        _free_local_checkpoint(bands_b)
-        _free_local_checkpoint(sh_b)
+        free(bands_b, sh_b)
 
     q = (
         spark.readStream.schema(schema)

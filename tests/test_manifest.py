@@ -115,3 +115,51 @@ def test_registry_growth_does_not_flip_hashes():
     finally:
         QUERIES.pop("_manifest_probe_key", None)
         ORACLES.pop("_manifest_probe_key", None)
+
+
+def test_live_share_does_not_flip_hashes():
+    """The share registry holds DataFrames while a key's shares are live;
+    its repr must not join the hash of the keys whose closure reaches it,
+    or the green-set guard would pass or fail depending on whether a
+    share happened to be registered."""
+    import __spark_entry__  # noqa: F401
+
+    from data_transform_spark import shares
+    from data_transform_spark.registry import ORACLES, QUERIES
+
+    keys = ("pipeline_e2e_llm", "pipeline_e2e_llm_v3", "pipeline_e2e_llm_v4")
+    before = {k: key_hash(QUERIES[k], ORACLES.get(k)) for k in keys}
+    shares._SHARES.append(object())
+    try:
+        after = {k: key_hash(QUERIES[k], ORACLES.get(k)) for k in keys}
+    finally:
+        shares._SHARES.pop()
+    assert before == after, "a live share flipped capstone key hashes"
+
+
+_V_PATH = """
+import os
+
+ROOT = {root!r}
+SCRATCH = os.path.join(ROOT, ".scratch")
+
+def op(x):
+    return SCRATCH + x
+"""
+
+
+def test_path_constant_hash_independent_of_checkout_root(tmp_path, monkeypatch):
+    """A path constant under the checkout root (operators/scans.py:SCRATCH)
+    must hash the same from any checkout, while a path that moves within
+    the checkout still flips the hash."""
+    import tools.gen_manifest as gm
+
+    def hash_under(root, sub=".scratch"):
+        monkeypatch.setattr(gm, "_REPO", root)
+        src = _V_PATH.format(root=root).replace('".scratch"', repr(sub))
+        return key_hash(_load(tmp_path, src).op, "SELECT 1")
+
+    h_a = hash_under("/srv/checkout-a/repo")
+    h_b = hash_under("/home/ci/other/repo")
+    assert h_a == h_b, "the checkout root leaked into the hash"
+    assert hash_under("/srv/checkout-a/repo", ".cache") != h_a

@@ -45,12 +45,18 @@ _PKG = "data_transform_spark"
 _MUTABLE_STATE = {
     f"{_PKG}.registry.QUERIES",
     f"{_PKG}.registry.ORACLES",
-    # r10: pipeline_e2e_llm's share-point cache — empty at import, holds
-    # DataFrames after an invocation, so its repr is run-state-dependent
-    # (stable "[]" before the first call, unstable after) and must never
-    # join the key's hash
-    f"{_PKG}.pipeline.e2e._E2E_PERSISTED",
+    # the share registry and fill pool: empty/None at import, they hold
+    # DataFrames / an executor while a key's shares are live, so their
+    # repr is run-state-dependent (stable "[]" before the first share,
+    # unstable after) and must never join a key's hash
+    f"{_PKG}.shares._SHARES",
+    f"{_PKG}.shares._FILL_POOL",
 }
+
+# Stands in for the checkout root inside hashed string constants, so a
+# path constant derived from __file__ (operators/scans.py:SCRATCH) hashes
+# the same from every checkout.
+_ROOT_TOKEN = "<checkout>"
 
 # Constant leaves whose repr is deterministic across processes. Containers
 # qualify only when every leaf does (a dict of FUNCTIONS like
@@ -63,6 +69,8 @@ def _stable_repr(value, depth: int = 0) -> str | None:
     """repr(value) iff it is process-stable, else None (skip the constant)."""
     if depth > 4:
         return None
+    if isinstance(value, str):
+        return repr(value.replace(_REPO, _ROOT_TOKEN))
     if isinstance(value, _CONST_LEAVES):
         return repr(value)
     if isinstance(value, (tuple, list)):

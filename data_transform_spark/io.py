@@ -10,15 +10,36 @@ arrives as long nanoseconds and is truncated with
 ``timestamp_micros(ts div 1000)`` (integer div — ns-since-epoch ~1.7e18
 exceeds exact double range; matches DuckDB's ns->us truncation exactly),
 while a MICROS column already scans as timestamp_ntz and passes through.
+
+Read path. Every parquet read in the package goes through
+``read_parquet(spark, *paths)``. ``spark.read.parquet`` infers the schema
+with a one-task Spark job on every call, even for a file read a moment
+earlier; ``read_parquet`` infers it once per file state and hands the
+stored ``StructType`` back to ``spark.read.schema(...)``, which launches no
+job. The stored schema is reused only while its signature matches:
+- name, size, ``mtime_ns`` and inode of every file under each path (a
+  directory is walked), so a rewritten or added file is re-inferred;
+- the session confs in ``_INFERENCE_CONFS``, which change what inference
+  returns (a flipped ``binaryAsString`` is re-inferred).
+A path the driver cannot ``stat`` — a remote store (``s3://``,
+``hdfs://``), a glob, a missing file — goes straight to
+``spark.read.parquet`` uncached, paying its inference job as before. The
+map keeps one entry per path tuple and holds only schemas, never
+DataFrames or sessions: a store rewritten in place replaces its entry,
+while a key that writes each build's store under a fresh name adds one
+small entry per build beside the store it leaves on disk.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import warnings
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = [
     "region",
@@ -34,8 +55,70 @@ TABLES = [
 ]
 
 
+# Session confs that change the schema Parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# paths -> (signature, inferred schema). Single dict reads and writes are
+# atomic, so share-fill threads may call read_parquet concurrently: a race
+# can infer a schema twice, and each entry pairs a schema with the
+# signature taken before its inference, so a hit is never stale.
+_SCHEMAS: dict[tuple[str, ...], tuple[tuple, StructType]] = {}
+
+
 def path_of(sf_dir: str, name: str) -> str:
     return f"{sf_dir}/{name}.parquet"
+
+
+def _file_states(path: str) -> tuple | None:
+    """(relative name, size, mtime_ns, inode) of every file under a local
+    path; None when the driver cannot stat it (remote store, glob, missing)."""
+    url = urlparse(path)
+    if url.scheme not in ("", "file"):
+        return None
+    local = url.path if url.scheme else path
+    try:
+        st = os.stat(local)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_size, st.st_mtime_ns, st.st_ino),)
+        states = []
+        for root, dirs, files in os.walk(local):
+            dirs.sort()
+            for name in sorted(files):
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                rel = os.path.relpath(full, local)
+                states.append((rel, st.st_size, st.st_mtime_ns, st.st_ino))
+        return tuple(states)
+    except OSError:  # vanished mid-walk: infer through Spark, uncached
+        return None
+
+
+def _signature(spark: SparkSession, paths: tuple[str, ...]) -> tuple | None:
+    files = tuple(_file_states(p) for p in paths)
+    if any(f is None for f in files):
+        return None
+    return files, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS)
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` that infers each schema once per file
+    state (see the module docstring)."""
+    sig = _signature(spark, paths)
+    if sig is None:
+        return spark.read.parquet(*paths)
+    hit = _SCHEMAS.get(paths)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(*paths)
+    df = spark.read.parquet(*paths)
+    _SCHEMAS[paths] = (sig, df.schema)
+    return df
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:
@@ -61,13 +144,13 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-assert here rather than silently shifting event timestamps on a
     # non-UTC driver session (round-3 ADVICE).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return normalize_event_ts(spark.read.parquet(path_of(sf_dir, "events")))
+    return normalize_event_ts(read_parquet(spark, path_of(sf_dir, "events")))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(path_of(sf_dir, name))
+    return read_parquet(spark, path_of(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
@@ -99,7 +182,12 @@ def spread(df, min_parts: int | None = None):
     target = min_parts or spark.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
-    except Exception:
+    except Exception as exc:
+        warnings.warn(
+            f"spread: could not list input files, not spreading: {exc!r}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return df
     est_splits = len(files)
     local = [f[len("file:"):] for f in files if f.startswith("file:")]
@@ -109,8 +197,12 @@ def spread(df, min_parts: int | None = None):
             mpb = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes", 128 << 20)
             open_cost = _bytes_conf(spark, "spark.sql.files.openCostInBytes", 4 << 20)
             est_splits = -(-(total + len(files) * open_cost) // mpb)
-        except OSError:
-            pass
+        except OSError as exc:
+            warnings.warn(
+                f"spread: could not size input files, estimating by count: {exc!r}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     if est_splits >= target:
         return df
     return df.repartition(target)
@@ -124,7 +216,12 @@ def _bytes_conf(spark: SparkSession, key: str, default: int) -> int:
     an unparseable value falls back to ``default``."""
     try:
         raw = spark.conf.get(key).strip().lower()
-    except Exception:
+    except Exception as exc:
+        warnings.warn(
+            f"_bytes_conf: could not read {key}, using {default}: {exc!r}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
         return default
     suffixes = (
         ("pb", 1 << 50), ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20),

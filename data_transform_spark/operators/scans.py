@@ -14,7 +14,7 @@ import re
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, normalize_event_ts, path_of
+from data_transform_spark.io import load_table, normalize_event_ts, path_of, read_parquet
 from data_transform_spark.registry import register
 
 SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
@@ -53,7 +53,7 @@ def sink_parquet(spark, sf_dir):
     """Parquet write + read-back round trip (hash-checked vs the original)."""
     out = f"{SCRATCH}/sink_parquet"
     load_table(spark, sf_dir, "customer").write.mode("overwrite").parquet(out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 @register("sink_partitioned", oracle="SELECT * FROM lineitem")
@@ -65,7 +65,7 @@ def sink_partitioned(spark, sf_dir):
     out = f"{SCRATCH}/sink_partitioned"
     li = load_table(spark, sf_dir, "lineitem")
     li.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
-    df = spark.read.parquet(out)
+    df = read_parquet(spark, out)
     # partitionBy moves the column last and infers type; restore name/type/order
     return df.select(*[F.col(c.name).cast(c.dataType) for c in li.schema])
 
@@ -90,7 +90,7 @@ def source_stream_file(spark, sf_dir):
     core Structured Streaming guarantee we rely on for every §2.I op.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path_of(sf_dir, "events")).schema
+    raw_schema = read_parquet(spark, path_of(sf_dir, "events")).schema
     # the file source requires a directory: stage the fixture into scratch.
     # The staged copy is invalidated when the source mtime/size changes so a
     # regenerated fixture is never served stale (round-1 ADVICE.md).
@@ -390,7 +390,7 @@ def join_dpp(spark, sf_dir):
                 "sm", F.date_format("l_shipdate", "yyyy-MM")
             ).write.mode("overwrite").partitionBy("sm").parquet(tmp),
         )
-    fact = spark.read.parquet(out)
+    fact = read_parquet(spark, out)
     w = Window.orderBy(F.col("n_ship").desc(), "m")
     dim = (
         li.groupBy(F.date_format("l_shipdate", "yyyy-MM").alias("m"))
@@ -491,9 +491,9 @@ def sink_compaction(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     docs.repartition(64).write.mode("overwrite").parquet(frag)
     n_in = len([f for f in os.listdir(frag) if f.endswith(".parquet")])
-    spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(compact)
+    read_parquet(spark, frag).coalesce(4).write.mode("overwrite").parquet(compact)
     n_out = len([f for f in os.listdir(compact) if f.endswith(".parquet")])
-    out = spark.read.parquet(compact)
+    out = read_parquet(spark, compact)
     # Invariant: fragmented input has MORE files than compacted output.
     # Pinning n_in == 64 assumed every round-robin partition non-empty —
     # fragile to smaller fixtures / writers that skip empty parts (r5
@@ -670,7 +670,7 @@ def sink_zorder(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(out)
     )
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_partkey", "zval"
     )
 
@@ -709,7 +709,7 @@ def sink_dynamic_overwrite(spark, sf_dir):
         patched.write.mode("overwrite").partitionBy("l_returnflag").parquet(out)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-    df = spark.read.parquet(out)
+    df = read_parquet(spark, out)
     # partitionBy moves the column last and infers its type; restore the
     # original name/type/order (same recipe as sink_partitioned)
     return df.select(*[F.col(c.name).cast(c.dataType) for c in li.schema])
@@ -778,7 +778,7 @@ def scan_metadata_cols(spark, sf_dir):
     shuffle and no extra scan: the values come from the scan's own file
     metadata. The oracle pins the grouped row count per (single-file
     fixture) file name."""
-    ev = spark.read.parquet(path_of(sf_dir, "events")).select(
+    ev = read_parquet(spark, path_of(sf_dir, "events")).select(
         F.col("_metadata.file_name").alias("file_name")
     )
     return ev.groupBy("file_name").agg(F.count(F.lit(1)).alias("n_rows"))
@@ -929,7 +929,7 @@ def sink_partition_audit(spark, sf_dir):
     out = f"{SCRATCH}/partition_audit_{tag}"
     ev = load_table(spark, sf_dir, "events")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
-    back = spark.read.parquet(out).select(
+    back = read_parquet(spark, out).select(
         "event_type",
         F.regexp_extract(F.col("_metadata.file_path"), "event_type=([^/]+)", 1).alias(
             "path_part"

@@ -21,7 +21,7 @@ import os
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, spread
+from data_transform_spark.io import load_table, path_of, read_parquet, spread
 from data_transform_spark.registry import register
 from data_transform_spark.shares import checkpoint, release_shares, share
 
@@ -1397,7 +1397,6 @@ def substring_store_dir(sf_dir: str) -> str:
     """Staged digest-store location — SF-namespaced + content-fingerprinted
     (the ivfpq_index_dir discipline): a store built against one corpus
     state can never be silently served for another."""
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "documents")
@@ -1501,7 +1500,7 @@ def text_substring_dedup_incr(spark, sf_dir):
     append to the store to keep the NEXT increment just as cheap (the
     dedup_incremental contract, substring tier)."""
     staged = substring_stage_store(spark, sf_dir)
-    store = spark.read.parquet(staged)
+    store = read_parquet(spark, staged)
     batch = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 >= 8
     )
@@ -1547,7 +1546,6 @@ def text_substring_dedup_incr(spark, sf_dir):
 
 def substring_store_v2_dir(sf_dir: str) -> str:
     """Location of the POST-increment store (history ∪ batch digests)."""
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "documents")
@@ -1597,7 +1595,7 @@ def text_substring_store_update(spark, sf_dir):
     from data_transform_spark.operators.scans import _stage_atomic
 
     staged = substring_stage_store(spark, sf_dir)
-    store = spark.read.parquet(staged)
+    store = read_parquet(spark, staged)
     staged2 = substring_store_v2_dir(sf_dir)
     if not os.path.exists(os.path.join(staged2, SUBSTR_STORE_MARKER)):
         batch = load_table(spark, sf_dir, "documents").filter(
@@ -1613,7 +1611,7 @@ def text_substring_store_update(spark, sf_dir):
         _stage_atomic(
             staged2, lambda tmp: updated.write.mode("overwrite").parquet(tmp)
         )
-    upd = spark.read.parquet(staged2)
+    upd = read_parquet(spark, staged2)
     n_hist = store.agg(F.count(F.lit(1)).cast("long").alias("n_hist"))
     n_total = upd.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
     return n_hist.crossJoin(F.broadcast(n_total)).select(
@@ -1645,7 +1643,6 @@ def _shingle_digests(docs):
 
 
 def minhash_store_dir(sf_dir: str) -> str:
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "documents")
@@ -1764,8 +1761,8 @@ def dedup_minhash_incr(spark, sf_dir):
     (dedup_incremental), substring (text_substring_dedup_incr), near-dup
     (this key)."""
     staged = minhash_stage_store(spark, sf_dir)
-    hist_bands = spark.read.parquet(f"{staged}/bands")
-    hist_sh = spark.read.parquet(f"{staged}/shingles")
+    hist_bands = read_parquet(spark, f"{staged}/bands")
+    hist_sh = read_parquet(spark, f"{staged}/shingles")
     batch = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 >= 8
     )

@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table
+from data_transform_spark.io import load_table, path_of, read_parquet, spread
 from data_transform_spark.registry import register
 from data_transform_spark.shares import release_shares, share, submit_fill
 
@@ -292,8 +292,6 @@ def _e2e_prefix(spark, sf_dir):
         substring_clean,
     )
 
-    from data_transform_spark.io import spread
-
     release_shares()
     d = spread(load_table(spark, sf_dir, "documents"))
 
@@ -390,7 +388,6 @@ def e2e_prefix_dir(sf_dir: str) -> str:
     silently served."""
     import os
 
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import (
         SCRATCH,
         _path_fingerprint,
@@ -448,12 +445,10 @@ def _e2e_prefix_staged(spark, sf_dir):
     n_neardup_surv) frame, decon the decontaminated survivors. Output-
     identical to _e2e_prefix (same build, parquet round-trip of
     long/string columns is lossless) — the capstone hashes pin it."""
-    from data_transform_spark.io import spread
-
     staged = stage_e2e_prefix(spark, sf_dir)
     d = spread(load_table(spark, sf_dir, "documents"))
-    stats = spark.read.parquet(f"{staged}/stats")
-    decon = spark.read.parquet(f"{staged}/decon")
+    stats = read_parquet(spark, f"{staged}/stats")
+    decon = read_parquet(spark, f"{staged}/decon")
     return d, stats, decon
 
 

@@ -23,7 +23,7 @@ import pandas as pd
 
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, spread
+from data_transform_spark.io import load_table, path_of, read_parquet, spread
 from data_transform_spark.registry import register
 
 
@@ -681,7 +681,6 @@ PHASH_STORE_MARKER = "_INDEX"
 def phash_store_dir(sf_dir: str) -> str:
     import os
 
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "documents")
@@ -743,7 +742,7 @@ def dedup_image_phash_incr(spark, sf_dir):
     dedup_image_phash under the same restriction is property-tested
     (phash_fingerprints is shared verbatim)."""
     staged = phash_stage_store(spark, sf_dir)
-    store_fp = spark.read.parquet(f"{staged}/fingerprints")
+    store_fp = read_parquet(spark, f"{staged}/fingerprints")
     batch = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 >= 8
     )

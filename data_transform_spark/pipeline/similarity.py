@@ -29,7 +29,7 @@ import numpy as np
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table
+from data_transform_spark.io import load_table, path_of, read_parquet
 from data_transform_spark.registry import register
 from data_transform_spark.shares import (
     fill_concurrently,
@@ -1211,7 +1211,6 @@ def ivfpq_index_dir(sf_dir: str) -> str:
     dir name itself is the cache key (the scan_* staging discipline)."""
     import os
 
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "embeddings")
@@ -1260,9 +1259,9 @@ def ivfpq_stage_index(spark, sf_dir) -> str:
 def ivfpq_read_index(spark, staged: str):
     """(cent, books, codes_l) DataFrames off the staged artifact."""
     return (
-        spark.read.parquet(f"{staged}/centroids"),
-        spark.read.parquet(f"{staged}/codebooks"),
-        spark.read.parquet(f"{staged}/codes"),
+        read_parquet(spark, f"{staged}/centroids"),
+        read_parquet(spark, f"{staged}/codebooks"),
+        read_parquet(spark, f"{staged}/codes"),
     )
 
 
@@ -1605,7 +1604,6 @@ def ivfpq_hist_index_dir(sf_dir: str) -> str:
     ivfpq_index_dir's full-corpus artifact."""
     import os
 
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "embeddings")
@@ -1844,7 +1842,6 @@ def graph_index_dir(sf_dir: str) -> str:
     on the embeddings fixture (the ivfpq_index_dir discipline)."""
     import os
 
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "embeddings")
@@ -1922,7 +1919,7 @@ def sim_ann_graph_topk(spark, sf_dir, rounds: int = GRAPH_ROUNDS, release: bool 
     if release:
         release_shares()
     staged = graph_stage_index(spark, sf_dir)
-    adj = spark.read.parquet(f"{staged}/adjacency")
+    adj = read_parquet(spark, f"{staged}/adjacency")
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb")
     )
@@ -2022,7 +2019,6 @@ def ivfpq_appends_dir(sf_dir: str) -> str:
     batch) — the accumulation a nightly encode-only job leaves behind."""
     import os
 
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "embeddings")
@@ -2064,7 +2060,6 @@ def ivfpq_stage_appends(spark, sf_dir) -> str:
 def ivfpq_compact_dir(sf_dir: str) -> str:
     import os
 
-    from data_transform_spark.io import path_of
     from data_transform_spark.operators.scans import SCRATCH, _path_fingerprint
 
     src = path_of(sf_dir, "embeddings")
@@ -2092,7 +2087,7 @@ def ivfpq_stage_compact(spark, sf_dir) -> str:
         cent, books, codes_hist = ivfpq_read_index(spark, hist_staged)
         merged = codes_hist
         for mod in ANN_COMPACT_BATCH_MODS:
-            batch_codes = spark.read.parquet(f"{appends}/batch-{mod}")
+            batch_codes = read_parquet(spark, f"{appends}/batch-{mod}")
             merged = merged.unionByName(batch_codes.select(*codes_hist.columns))
 
         def _build(tmp: str) -> None:
@@ -2156,11 +2151,11 @@ def sim_ann_index_compact(spark, sf_dir):
     appends = ivfpq_stage_appends(spark, sf_dir)
     hist_staged = ivfpq_stage_hist_index(spark, sf_dir)
     cent, books, codes_hist = ivfpq_read_index(spark, hist_staged)
-    compact_codes = spark.read.parquet(f"{staged}/codes")
+    compact_codes = read_parquet(spark, f"{staged}/codes")
     merged = codes_hist
     for mod in ANN_COMPACT_BATCH_MODS:
         merged = merged.unionByName(
-            spark.read.parquet(f"{appends}/batch-{mod}").select(
+            read_parquet(spark, f"{appends}/batch-{mod}").select(
                 *codes_hist.columns
             )
         )

@@ -14,6 +14,7 @@ set to ~2-3x total executor cores (AQE coalesces down), and
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -51,8 +52,12 @@ def configure_session(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable on this build: proceed, loaders re-assert
+        except Exception as exc:  # non-settable on this build: loaders re-assert
+            warnings.warn(
+                f"configure_session: could not set {k}={v}: {exc!r}",
+                RuntimeWarning,
+                stacklevel=2,
+            )
     return spark
 
 

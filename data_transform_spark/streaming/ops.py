@@ -18,12 +18,13 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 import uuid
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from data_transform_spark.io import load_table, normalize_event_ts, path_of
+from data_transform_spark.io import load_table, normalize_event_ts, path_of, read_parquet
 from data_transform_spark.operators.events import _SESSION_MOTIF_ORACLE
 from data_transform_spark.operators.scans import SCRATCH
 from data_transform_spark.pipeline.dedup import MINHASH_INCR_ORACLE
@@ -76,7 +77,7 @@ def stage_events_dir(sf_dir: str) -> str:
 def events_stream(spark, sf_dir: str):
     """readStream over events; ts normalized to us whatever the fixture dtype."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw_schema = spark.read.parquet(path_of(sf_dir, "events")).schema
+    raw_schema = read_parquet(spark, path_of(sf_dir, "events")).schema
     return normalize_event_ts(
         spark.readStream.schema(raw_schema).parquet(stage_events_dir(sf_dir))
     )
@@ -196,6 +197,14 @@ def stage_events_chunks(sf_dir: str, plant_late: bool) -> str:
             chunk.to_parquet(f"{src}/chunk_{i}.parquet", index=False)
         with open(ready, "w") as f:
             f.write(stamp)
+    # maxFilesPerTrigger=1 replays files in modification-time order, read at
+    # millisecond precision, so chunks written within one millisecond would
+    # replay in listing order. Space their mtimes 1 s apart in index order
+    # (also on a cached staging, which may predate this ordering).
+    base = time.time_ns() - 4 * 1_000_000_000
+    for i in range(4):
+        t = base + i * 1_000_000_000
+        os.utime(f"{src}/chunk_{i}.parquet", ns=(t, t))
     return src
 
 
@@ -228,7 +237,7 @@ def stream_watermark(spark, sf_dir):
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = stage_events_chunks(sf_dir, plant_late=True)
 
-    raw_schema = spark.read.parquet(path_of(sf_dir, "events")).schema
+    raw_schema = read_parquet(spark, path_of(sf_dir, "events")).schema
     stream = normalize_event_ts(
         spark.readStream.schema(raw_schema).option("maxFilesPerTrigger", 1).parquet(src)
     )
@@ -304,8 +313,6 @@ def stream_stateful(spark, sf_dir):
 )
 def stream_static_join(spark, sf_dir):
     """Stream ⋈ broadcast static dimension (per-batch hash join, no state)."""
-    from data_transform_spark.io import load_table
-
     customer = load_table(spark, sf_dir, "customer")
     joined = (
         events_stream(spark, sf_dir)
@@ -420,8 +427,6 @@ def stream_stream_join(spark, sf_dir):
 def stream_tumbling_batch(spark, sf_dir):
     """Batch twin of stream_tumbling (same plan minus the state store) —
     doubles as the hypertable-style time-bucket rollup and the bench entry."""
-    from data_transform_spark.io import load_table
-
     return (
         load_table(spark, sf_dir, "events")
         .groupBy(F.window("ts", "1 hour"), "event_type")
@@ -472,7 +477,7 @@ def stream_upsert_sink(spark, sf_dir):
         upd = _latest_per_user(batch_df)
         if os.path.exists(out):
             upd = _latest_per_user(
-                batch_df.sparkSession.read.parquet(out).unionByName(upd)
+                read_parquet(batch_df.sparkSession, out).unionByName(upd)
             )
         upd.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(out, ignore_errors=True)
@@ -485,7 +490,7 @@ def stream_upsert_sink(spark, sf_dir):
         .start()
     )
     q.awaitTermination()
-    return spark.read.parquet(out).select(
+    return read_parquet(spark, out).select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
 
@@ -564,7 +569,7 @@ def docs_stream(spark, sf_dir: str):
     """readStream over the documents table — the ingestion shape of a
     continuously-crawled corpus (files land, the curation stream picks
     them up)."""
-    raw_schema = spark.read.parquet(path_of(sf_dir, "documents")).schema
+    raw_schema = read_parquet(spark, path_of(sf_dir, "documents")).schema
     return spark.readStream.schema(raw_schema).parquet(stage_docs_dir(sf_dir))
 
 
@@ -648,7 +653,7 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
         F.col("doc_id") % 10 >= 8
     )
     docs.repartition(4).write.parquet(input_dir)
-    schema = spark.read.parquet(input_dir).schema
+    schema = read_parquet(spark, input_dir).schema
 
     def _prior(d: str, batch_id: int) -> list[str]:
         return [
@@ -669,8 +674,8 @@ def run_stream_dedup_incr(spark, sf_dir, run: str):
         # measured SLOWER here — OPTIMIZATION_r14.md wave 3/6).
         bands_b = checkpoint(_sig_bands(minhash_signatures(batch_df)))
         sh_b = checkpoint(_shingle_digests(batch_df))
-        store_bands = s.read.parquet(*_prior(bands_dir, batch_id))
-        store_sh = s.read.parquet(*_prior(sh_dir, batch_id))
+        store_bands = read_parquet(s, *_prior(bands_dir, batch_id))
+        store_sh = read_parquet(s, *_prior(sh_dir, batch_id))
         h, n = store_bands.alias("h"), bands_b.alias("n")
         cross = (
             h.join(

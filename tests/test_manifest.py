@@ -137,6 +137,24 @@ def test_live_share_does_not_flip_hashes():
     assert before == after, "a live share flipped capstone key hashes"
 
 
+def test_populated_schema_map_does_not_flip_hashes(monkeypatch):
+    """io._SCHEMAS fills as tables are read and is reachable from every key
+    that loads a table; its contents must not join those keys' hashes."""
+    import __spark_entry__  # noqa: F401
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from data_transform_spark import io
+    from data_transform_spark.registry import ORACLES, QUERIES
+
+    keys = ("tpch_q1", "graph_label_prop", "stream_watermark", "pipeline_e2e")
+    monkeypatch.setattr(io, "_SCHEMAS", {})
+    before = {k: key_hash(QUERIES[k], ORACLES.get(k)) for k in keys}
+    io._SCHEMAS[("/t.parquet",)] = ((), StructType([StructField("a", LongType())]))
+    after = {k: key_hash(QUERIES[k], ORACLES.get(k)) for k in keys}
+    assert before == after, "a populated schema map flipped key hashes"
+
+
 _V_PATH = """
 import os
 

@@ -212,7 +212,11 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
     """Keys audited for eager driver-side actions (round-4 VERDICT #2-3)
     must build their plan WITHOUT running any Spark job: the n_docs /
     orphan-count scalars ride in-plan as broadcast 1-row aggregates. At
-    100 TB an eager .count() at plan-build time is an extra full pass."""
+    100 TB an eager .count() at plan-build time is an extra full pass.
+
+    The first build may stage stores and infer each parquet schema with a
+    one-task footer job; io.read_parquet reuses those schemas, so a second
+    build of the same key must launch no job at all."""
     from data_transform_spark import api
     from data_transform_spark.io import load_table
 
@@ -231,28 +235,20 @@ def test_plan_build_runs_no_jobs(spark, sf_dir):
         "api.tfidf": _build_api_tfidf,
     }
     for key, builder in builders.items():
+        build = builder or (lambda key=key: QUERIES[key](spark, sf_dir))
+        build()  # warm: stage stores, infer schemas
         group = f"plan-build-{key}"
         sc.setJobGroup(group, "plan-build eager-job guard")
         try:
-            if builder is None:
-                QUERIES[key](spark, sf_dir)  # build only — no action
-            else:
-                builder()
+            build()  # build only — no action
         finally:
             sc.setJobGroup("", "")
-        # Spark runs a 1-task "parquet at ..." footer job per read call for
-        # schema inference — metadata-only, tolerated. Anything else (a
-        # count/collect stage, a shuffle) is an eager driver-side action.
+        jobs = []
         for jid in tracker.getJobIdsForGroup(group):
             info = tracker.getJobInfo(jid)
-            for sid in info.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is None:
-                    continue
-                assert si.name.startswith("parquet at") and si.numTasks == 1, (
-                    f"{key} ran eager job {jid} stage '{si.name}' "
-                    f"({si.numTasks} tasks) at plan-build time"
-                )
+            names = [getattr(tracker.getStageInfo(s), "name", "?") for s in info.stageIds]
+            jobs.append((jid, names))
+        assert not jobs, f"{key} ran jobs {jobs} at plan-build time"
 
 
 def test_decontaminate_broadcasts_bench_grams(spark, sf_dir):

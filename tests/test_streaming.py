@@ -78,6 +78,34 @@ def test_watermark_drops_late_rows(spark, sf_dir, state_provider):
         assert n == batch[w], f"window {w}: stream={n} batch={batch[w]}"
 
 
+@pytest.mark.parametrize("written", ["same_instant", "reversed"])
+def test_watermark_chunk_order_does_not_depend_on_write_time(
+    spark, sf_dir, tmp_path, monkeypatch, written
+):
+    """stream_watermark replays its chunks one file per micro-batch in
+    mtime order. Chunks whose writes land in one millisecond (or, worse,
+    in reverse) must still replay in index order and match the oracle."""
+    import os
+
+    import pandas as pd
+
+    from data_transform_spark.streaming import ops
+    from tests.oracle import check_key
+
+    monkeypatch.setattr(ops, "SCRATCH", str(tmp_path))
+    to_parquet = pd.DataFrame.to_parquet
+    t0 = 1_700_000_000_000_000_000
+
+    def write_then_stamp(self, path, *args, **kwargs):
+        to_parquet(self, path, *args, **kwargs)
+        i = int(os.path.basename(path).split("_")[1].split(".")[0])
+        t = t0 if written == "same_instant" else t0 - i * 1_000_000_000
+        os.utime(path, ns=(t, t))
+
+    monkeypatch.setattr(pd.DataFrame, "to_parquet", write_then_stamp)
+    assert check_key(spark, "stream_watermark", sf_dir) == []
+
+
 def test_stream_dedup_no_duplicates(spark, sf_dir, state_provider):
     rows = QUERIES["stream_dedup"](spark, sf_dir).collect()
     ids = [r["event_id"] for r in rows]

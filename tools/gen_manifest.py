@@ -51,6 +51,10 @@ _MUTABLE_STATE = {
     # unstable after) and must never join a key's hash
     f"{_PKG}.shares._SHARES",
     f"{_PKG}.shares._FILL_POOL",
+    # the parquet schema map: "{}" at import, then StructTypes keyed by
+    # the paths this process has read, so every key reaching load_table
+    # would hash differently once a read had happened
+    f"{_PKG}.io._SCHEMAS",
 }
 
 # Stands in for the checkout root inside hashed string constants, so a
